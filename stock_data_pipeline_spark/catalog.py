@@ -245,10 +245,6 @@ def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(TABLE_SCHEMAS["events"]).parquet(f"{sf_dir}/events.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in ALL_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every shared table as a temp view for the SQL API."""
     for name in ALL_TABLES:

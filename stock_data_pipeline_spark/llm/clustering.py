@@ -48,23 +48,6 @@ def _sq_dist(qv, cv):
     )
 
 
-def _sq_dist_unrolled(qv, cv, dim: int):
-    """:func:`_sq_dist` with the fold statically unrolled for a
-    plan-time-known dimension: ``0.0 + t_1 + t_2 + …`` is the exact
-    left-to-right association the zip_with/aggregate fold (and the SQL
-    oracle's list_reduce) computes, so results are bit-identical — but
-    the expression is plain column arithmetic (element_at + mul + add),
-    an order of magnitude cheaper to evaluate than nested
-    higher-order-function lambdas when it sits INSIDE another HOF
-    lambda, where codegen cannot reach (the hot path of the PQ
-    assignment: N·m·k evaluations)."""
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        d = F.element_at(qv, i).cast("double") - F.element_at(cv, i)
-        acc = acc + d * d
-    return acc
-
-
 def _assign(pts: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest centroid per point; ties broken by centroid id. The
     centroid table is k rows — broadcast, so the corpus never shuffles

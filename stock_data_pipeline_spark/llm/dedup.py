@@ -77,16 +77,6 @@ def ngrams_from_tokens(toks, n: int = 2):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_ngrams(text_col, n: int = 2):
-    """Word n-gram shingles as an array column (positions i..i+n-1).
-
-    Convenience form over an unmaterialized text column — fine for
-    one-shot expressions, but inside explode/HOF pipelines prefer
-    projecting ``tokens(text)`` to a column and calling
-    ``ngrams_from_tokens`` (see its docstring for why)."""
-    return ngrams_from_tokens(tokens(text_col), n)
-
-
 def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Project (id, __tk) with the token array materialized once."""
     return df.select(F.col(id_col), tokens(text_col).alias("__tk"))
@@ -313,28 +303,18 @@ def _perm_constants(num_perm: int) -> list[tuple[int, int]]:
     return consts
 
 
-def _portable_shingle_hash(shingle: F.Column) -> F.Column:
-    """Polynomial rolling hash of the shingle (base 31 mod 1e9+7) —
-    engine-portable (same fold any ANSI-SQL engine can run), used when
-    MinHash results must be verifiable against an independent engine.
-    xxhash64 is the faster production default.
-
-    Folds FOUR chars per step instead of one: a short closed-form seed
-    covers ``len mod 4`` leading chars (no HOF), then each aggregate
-    step consumes a 4-char chunk as
-    ``acc·31⁴ + ((c₀·31+c₁)·31+c₂)·31+c₃``, deferring the mod to once
-    per chunk. Values stay exact — acc < 1e9+7 so acc·31⁴ < 2⁵⁰, chunk
-    < 2²³ — and char-by-char-with-mod ≡ chunk-wise-with-deferred-mod,
-    so the hash is bit-identical to the per-char fold (asserted in
-    tests/test_llm.py) and every committed generated oracle is
-    unchanged. ~4× fewer interpreted HOF lambda dispatches per
-    shingle, which dominated the verification twin's CPU (q54)."""
+def _chunked_fold_parts(s: F.Column) -> tuple[F.Column, F.Column, F.Column, F.Column]:
+    """``(p, r, seed, chunks)`` shared by the portable polynomial hashes
+    (base 31 mod p = 1e9+7): ``r = len mod 4``, ``seed`` = the
+    closed-form fold of the ``r`` leading chars, ``chunks`` = the
+    remaining chars as 4-char values ``((c₀·31+c₁)·31+c₂)·31+c₃``.
+    Each caller folds ``chunks`` onto ``seed`` with its own aggregate."""
     p = F.lit(1_000_000_007).cast("long")
 
     def code(pos: F.Column) -> F.Column:
-        return F.ascii(shingle.substr(pos, F.lit(1))).cast("long")
+        return F.ascii(s.substr(pos, F.lit(1))).cast("long")
 
-    ln = F.length(shingle)
+    ln = F.length(s)
     r = ln % F.lit(4)
     c1, c2, c3 = code(F.lit(1)), code(F.lit(2)), code(F.lit(3))
     # The closed-form seed is reduced mod p: Spark's ascii() returns
@@ -363,6 +343,26 @@ def _portable_shingle_hash(shingle: F.Column) -> F.Column:
             + code(r + (j - 1) * 4 + 4),
         ),
     ).otherwise(F.array().cast("array<long>"))
+    return p, r, seed, chunks
+
+
+def _portable_shingle_hash(shingle: F.Column) -> F.Column:
+    """Polynomial rolling hash of the shingle (base 31 mod 1e9+7) —
+    engine-portable (same fold any ANSI-SQL engine can run), used when
+    MinHash results must be verifiable against an independent engine.
+    xxhash64 is the faster production default.
+
+    Folds FOUR chars per step instead of one: a short closed-form seed
+    covers ``len mod 4`` leading chars (no HOF), then each aggregate
+    step consumes a 4-char chunk as
+    ``acc·31⁴ + ((c₀·31+c₁)·31+c₂)·31+c₃``, deferring the mod to once
+    per chunk. Values stay exact — acc < 1e9+7 so acc·31⁴ < 2⁵⁰, chunk
+    < 2²³ — and char-by-char-with-mod ≡ chunk-wise-with-deferred-mod,
+    so the hash is bit-identical to the per-char fold (asserted in
+    tests/test_llm.py) and every committed generated oracle is
+    unchanged. ~4× fewer interpreted HOF lambda dispatches per
+    shingle, which dominated the verification twin's CPU (q54)."""
+    p, _, seed, chunks = _chunked_fold_parts(shingle)
     return F.aggregate(
         chunks, seed, lambda acc, v: (acc * F.lit(923521) + v) % p
     )
@@ -374,41 +374,13 @@ def _token_hp(tok: F.Column) -> F.Column:
     :func:`_portable_shingle_hash`), ``pw`` = ``31^len(tok) mod p`` —
     the power the composition law needs. Both ride the same chunked
     fold, so ``pw`` costs one extra mult-mod per 4-char chunk."""
-    p = F.lit(1_000_000_007).cast("long")
-
-    def code(pos: F.Column) -> F.Column:
-        return F.ascii(tok.substr(pos, F.lit(1))).cast("long")
-
-    ln = F.length(tok)
-    r = ln % F.lit(4)
-    c1, c2, c3 = code(F.lit(1)), code(F.lit(2)), code(F.lit(3))
-    # seed % p: same astral-plane corner as _portable_shingle_hash —
-    # keeps the two paths bit-identical for 1-char tokens past the BMP.
-    seed = (
-        F.when(r == 0, F.lit(0).cast("long"))
-        .when(r == 1, c1)
-        .when(r == 2, c1 * 31 + c2)
-        .otherwise((c1 * 31 + c2) * 31 + c3)
-    ) % p
+    p, r, seed, chunks = _chunked_fold_parts(tok)
     pw0 = (
         F.when(r == 0, F.lit(1).cast("long"))
         .when(r == 1, F.lit(31).cast("long"))
         .when(r == 2, F.lit(961).cast("long"))
         .otherwise(F.lit(29791).cast("long"))
     )
-    nfull = ((ln - r) / F.lit(4)).cast("long")
-    chunks = F.when(
-        nfull >= 1,
-        F.transform(
-            F.sequence(F.lit(1).cast("long"), nfull),
-            lambda j: (
-                (code(r + (j - 1) * 4 + 1) * 31 + code(r + (j - 1) * 4 + 2)) * 31
-                + code(r + (j - 1) * 4 + 3)
-            )
-            * 31
-            + code(r + (j - 1) * 4 + 4),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
     init = F.struct(seed.alias("h"), pw0.alias("pw"))
     return F.aggregate(
         chunks,

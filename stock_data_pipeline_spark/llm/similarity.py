@@ -480,37 +480,6 @@ def ivf_flat_topk_bucketed(
     return _ivf_rerank_topk(cands, k, exclude_self)
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 8,
-    num_tables: int = 4,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via LSH candidates + exact
-    threshold filter. Returns (id_a, id_b, score), id_a < id_b."""
-    if df.isStreaming:
-        raise ValueError("near-dup pairing is a batch operator")
-    cand = _with_buckets(df, id_col, vec_col, "id_a", num_tables, num_planes)
-    other = _with_buckets(df, id_col, vec_col, "id_b", num_tables, num_planes)
-    ids = (
-        cand.join(other, ["table_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__avec"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__bvec"))
-    return (
-        ids.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("score", cosine(F.col("__avec"), F.col("__bvec")))
-        .filter(F.col("score") >= threshold)
-        .select("id_a", "id_b", "score")
-    )
-
-
 def quantized_prefix_topk(
     emb: DataFrame,
     n_dims: int,

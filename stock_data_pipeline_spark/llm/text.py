@@ -8,7 +8,7 @@ reduces, integer mods) so every operator is oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 FINGERPRINT_MOD = 1_000_000_007
@@ -121,15 +121,3 @@ def fingerprint_fast(text_col: Column | str) -> Column:
     """64-bit xxhash64 fingerprint — the scale path for exact dedup."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.xxhash64(c)
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach the full text-analysis column family."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("stopword_ratio", stopword_ratio(text_col))
-        .withColumn("punct_ratio", punct_ratio(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("lang_pred", lang_id(text_col))
-        .withColumn("fingerprint", fingerprint(text_col))
-    )

@@ -1,91 +1,20 @@
-"""Registry API: driver-facing queries()/oracle_sql()/headline_queries()
-and the rotation that feeds never-driver-verified queries first.
-
-Split from the former queries.py tail; the repo-root lookup in
-_externally_verified accounts for the extra package level.
-"""
+"""Registry API: driver-facing queries()/oracle_sql()/headline_queries(),
+all in registry order."""
 from __future__ import annotations
 
 from collections.abc import Callable
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ._p1_parity_corpus import REGISTRY
 
 
-
-
-def _externally_verified(root: Path | None = None) -> set[str]:
-    """Query names with a green row in any committed driver
-    ``CORRECTNESS_r*.json``. Green = full value-hash MATCH, or a
-    recorded rows-only row for the by-design no-oracle entries (the
-    strongest row the driver can ever give those). Used only to ORDER
-    the registry so the driver's fixed-size correctness snapshot
-    rotates through still-unverified queries each round (VERDICT r02,
-    next-round item 1).
-
-    Failure mode matters (r06 VERDICT item 7): a malformed artifact
-    must degrade to "that file contributes nothing" — never crash
-    ``queries()`` and never silently de-rotate (tests/test_rotation.py
-    pins both). ``root`` is injectable for those tests only."""
-    import json
-
-    green: set[str] = set()
-    if root is None:
-        root = Path(__file__).resolve().parent.parent.parent
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            rows = json.loads(path.read_text())
-        except Exception:
-            continue
-        if not isinstance(rows, dict):
-            continue  # e.g. a JSON array: valid JSON, wrong shape
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            # rows-only green requires an ACTUALLY-RECORDED row count
-            # (`is not None`, r06 ADVICE — `or 0 >= 0` was vacuously
-            # true, letting a no_oracle row with no recorded rows stop
-            # rotating to the front)
-            if row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            ):
-                green.add(name)
-    return green
-
-
-def _rotated_names(root: Path | None = None) -> list[str]:
-    """Registry names ordered for the driver: not-yet-externally-verified
-    queries first (registry order), already-green queries after. The
-    driver snapshots a fixed prefix, so this rotation gives every
-    registry entry an external green row across rounds without changing
-    which queries exist or what they compute.
-
-    Only ORACLE-BACKED entries are declared (VERDICT r03 item 3).
-    Since r07 that is EVERY registry entry: the three xxhash64 fast
-    twins (q26/q27/q29), rows-only through r06, now carry full value
-    oracles built on a single-expression DuckDB port of Spark's
-    xxhash64 (functions/xx64.py — pure SQL, so the driver's bare
-    connection can run them; r06 VERDICT item 4). Their historical
-    rows-only driver rows keep them in the already-green section, so
-    declaring them did not perturb the predicted r07 window."""
-    green = _externally_verified(root)
-    names = [n for n in REGISTRY if REGISTRY[n].oracle]
-    return [n for n in names if n not in green] + [n for n in names if n in green]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: REGISTRY[name].fn for name in _rotated_names()}
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _rotated_names()
-        if REGISTRY[name].oracle
-    }
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle}
 
 
 def headline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

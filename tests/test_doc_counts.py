@@ -22,6 +22,14 @@ def _counts() -> tuple[int, int]:
     return len(REGISTRY), len(oracle_sql())
 
 
+def test_driver_api_is_registry_order():
+    """The driver's ``queries()``/``oracle_sql()`` key sets: every
+    registered query exactly once, oracle-backed, in registry order."""
+    from stock_data_pipeline_spark.queries import REGISTRY, oracle_sql, queries
+
+    assert list(queries()) == list(oracle_sql()) == list(REGISTRY)
+
+
 def test_readme_live_counts_match_registry():
     registered, declared = _counts()
     text = (ROOT / "README.md").read_text()
